@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import graft.sources.Sinks
 
 /** Keyed upsert ("MERGE") — the reference's universal incremental sink.
@@ -17,15 +18,17 @@ import graft.sources.Sinks
   * priority, which is already deterministic per key because keys are
   * unique within each side in the reference's contract).
   *
-  * Physical shape: ONE hash-partition shuffle of target ∪ updates on
-  * the key columns, then a per-partition window dedupe — the same cost
-  * profile as a shuffle-hash MERGE in a warehouse. At 100 TB the win
-  * comes from `mergeWrite`: the merged result is written with dynamic
-  * partition overwrite so only date partitions that actually received
-  * updates are rewritten; untouched partitions are never read or
-  * written. Combined with a high-water-mark filter on the updates side
-  * (see Incremental.highWaterMark) a daily run touches only recent
-  * partitions regardless of total table size.
+  * Physical shape: ONE hash-partition shuffle of target ∪ updates,
+  * then a per-partition window dedupe — the same cost profile as a
+  * shuffle-hash MERGE in a warehouse. [[mergeInto]] shuffles on the
+  * key columns; [[mergeWrite]] shuffles on the partition column, so the
+  * same exchange also co-locates each partition's rows for its single
+  * writer. At 100 TB the win comes from `mergeWrite`: the merged result
+  * is written with dynamic partition overwrite so only date partitions
+  * that actually received updates are rewritten; untouched partitions
+  * are never read or written. Combined with a high-water-mark filter on
+  * the updates side (see Incremental.highWaterMark) a daily run touches
+  * only recent partitions regardless of total table size.
   *
   * Idempotency contract (README.md:93-129): merge(merge(t,u),u) ==
   * merge(t,u) — covered by MergeSpec property tests.
@@ -58,7 +61,13 @@ object Merge {
                 versionCol: Option[String] = None,
                 onSchemaChange: SchemaChange = IgnoreSchemaChange): DataFrame = {
     require(keys.nonEmpty, "merge requires at least one key column")
-    val unioned = onSchemaChange match {
+    latest(union(target, updates, onSchemaChange), keys, versionCol)
+  }
+
+  /** target ∪ updates, each row tagged with its side's priority. */
+  private def union(target: DataFrame, updates: DataFrame,
+                    onSchemaChange: SchemaChange): DataFrame =
+    onSchemaChange match {
       case IgnoreSchemaChange =>
         val cols = target.columns.toSeq
         target.select(cols.map(col): _*).withColumn(PRIO, lit(0))
@@ -68,6 +77,11 @@ object Merge {
           .unionByName(updates.withColumn(PRIO, lit(1)),
             allowMissingColumns = true)
     }
+
+  /** The winning row per `keys` of a [[union]]: highest `versionCol`,
+    * then updates over target. */
+  private def latest(unioned: DataFrame, keys: Seq[String],
+                     versionCol: Option[String]): DataFrame = {
     val ordering: Seq[Column] =
       versionCol.map(v => Seq(col(v).desc_nulls_last, col(PRIO).desc))
         .getOrElse(Seq(col(PRIO).desc))
@@ -78,17 +92,51 @@ object Merge {
       .drop(RN, PRIO)
   }
 
-  /** Partition-pruned merge + persist: the O(delta) daily merge.
+  /** The table at `path` with `partitionCol` typed as `declared`,
+    * opened without touching session conf: flipping the session-wide
+    * inference flag around a read races with every concurrent reader.
+    * Default inference decides first (dates, ints: one open). When it
+    * guesses another type — string `'00123'` infers as int 123, which
+    * would rewrite into a different directory and duplicate every key —
+    * the table reopens with an explicit schema carrying `declared`: a
+    * user-specified partition type is parsed from the directory name
+    * without inference (SPARK-26188). */
+  private def openTyped(spark: SparkSession, path: String, partitionCol: String,
+                        declared: DataType): DataFrame = {
+    val inferred = spark.read.parquet(path)
+    if (inferred.schema(partitionCol).dataType == declared) inferred
+    else spark.read.schema(StructType(inferred.schema.map(f =>
+      if (f.name == partitionCol) f.copy(dataType = declared) else f))).parquet(path)
+  }
+
+  /** `col IN values`, NULL-aware: NULL is a legal partition value
+    * (`__HIVE_DEFAULT_PARTITION__`) but isin() never matches it —
+    * without the explicit isNull branch a NULL partition's rows would
+    * be left out of the rewrite and then overwritten away: silent data
+    * loss. */
+  private def inValues(c: String, values: Seq[Any]): Column = {
+    val nonNull = values.filter(_ != null)
+    val base = if (nonNull.nonEmpty) col(c).isin(nonNull: _*) else lit(false)
+    if (values.contains(null)) base || col(c).isNull else base
+  }
+
+  /** Partition-pruned merge + persist: the O(delta) daily merge, in one
+    * shuffle and one write.
     *
     * 1. Collect the distinct partition values present in `updates`
     *    (a handful of dates — driver-side list, not data).
-    * 2. Read ONLY those partitions of the target (directory pruning —
+    * 2. Open ONLY those partitions of the target (directory pruning —
     *    untouched partitions are never opened).
-    * 3. Merge the slice with the updates, write it to a staging dir
-    *    (never read and overwrite the same path in one job), then
-    *    commit with DYNAMIC partition overwrite — only the touched
-    *    partition directories are replaced; everything else on disk is
-    *    untouched bytes.
+    * 3. Repartition target slice ∪ updates once on `partitionCol`,
+    *    dedupe per `(partitionCol +: keys)`, sort within partitions by
+    *    `partitionCol +: clusterCols`, and write straight into `path`
+    *    with DYNAMIC partition overwrite: one writer, so one file, per
+    *    touched partition, and only those directories are replaced.
+    *    Reading and overwriting one path in one job is safe here:
+    *    Spark's commit protocol stages the files under
+    *    `<path>/.spark-staging-<job>` and swaps the written partition
+    *    directories at job commit, after every task has finished
+    *    reading, and the target's file list is fixed when it is opened.
     *
     * Daily cost is therefore proportional to the updated partitions,
     * not the table: the property that keeps a 100 TB mart's daily run
@@ -96,60 +144,33 @@ object Merge {
     * for parquet min/max data skipping (the reference's `cluster_by`,
     * invoice_line_items.sql:5-6).
     *
-    * Precondition (same as any partitioned MERGE): a key's partition
-    * value is stable — updates to a key arrive in the partition that
-    * already holds it.
+    * Contract: the merge is PARTITION-LOCAL — rows match on
+    * `(partitionCol, keys)`, so a key's updates must arrive in the
+    * partition that already holds it (a key's partition value is
+    * stable, as in any partitioned MERGE). A key that shows up in two
+    * partitions keeps one row in each.
     */
-  def mergeWrite(spark: org.apache.spark.sql.SparkSession, path: String,
+  def mergeWrite(spark: SparkSession, path: String,
                  updates: DataFrame, keys: Seq[String], partitionCol: String,
                  clusterCols: Seq[String] = Nil,
                  versionCol: Option[String] = None): Unit = {
     val touched = updates.select(col(partitionCol)).distinct()
       .collect().map(_.get(0)).toSeq
     if (touched.isEmpty) return
-    // NULL is a legal partition value (__HIVE_DEFAULT_PARTITION__) but
-    // isin() never matches it — without the explicit isNull branch the
-    // target's null-partition rows would be excluded from the merge
-    // and then dynamic-overwritten away: silent data loss.
-    val nonNull = touched.filter(_ != null)
-    val touchedPred = {
-      val base = if (nonNull.nonEmpty) col(partitionCol).isin(nonNull: _*) else lit(false)
-      if (touched.contains(null)) base || col(partitionCol).isNull else base
-    }
     // Existence is probed explicitly (Hadoop FS — works on HDFS/S3 too);
     // a read failure on an EXISTING table must propagate, or the merge
     // would silently replace touched partitions with updates-only.
     val targetSlice =
-      if (graft.sources.Fs.exists(spark, path)) {
-        // Partition-directory names re-infer as the WRONG type for
-        // string values that look numeric ('00123' → int 123, which
-        // would rewrite into a different directory and duplicate every
-        // key). Read them uninferred (strings), then cast to the
-        // updates' declared type — deterministic for dates/ints,
-        // identity for strings.
-        val conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        val saved = spark.conf.get(conf)
-        val raw =
-          try { spark.conf.set(conf, "false"); spark.read.parquet(path) }
-          finally spark.conf.set(conf, saved)
-        raw.withColumn(partitionCol,
-          col(partitionCol).cast(updates.schema(partitionCol).dataType))
-          .filter(touchedPred)
-      } else updates.limit(0)
-    val merged = mergeInto(targetSlice, updates, keys, versionCol)
-    // Unique staging dir (never read-and-overwrite one path in a job):
-    // concurrent merges into the same target must not share a stage,
-    // and the stage is deleted after the commit — a fixed leftover
-    // sibling would double the touched partitions' storage forever.
-    val stage = path + "_merge_stage_" + java.util.UUID.randomUUID().toString
-    try {
-      Sinks.stagePartitioned(merged, stage, partitionCol, clusterCols)
-      spark.read.parquet(stage).write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol)
-        .parquet(path)
-    } finally graft.sources.Fs.deleteRecursively(spark, stage)
+      if (graft.sources.Fs.exists(spark, path))
+        openTyped(spark, path, partitionCol, updates.schema(partitionCol).dataType)
+          .filter(inValues(partitionCol, touched))
+      else updates.limit(0)
+    val merged = latest(
+      union(targetSlice, updates, IgnoreSchemaChange).repartition(col(partitionCol)),
+      (partitionCol +: keys).distinct, versionCol)
+    Sinks.overwritePartitions(
+      merged.sortWithinPartitions((partitionCol +: clusterCols).map(col): _*),
+      path, partitionCol)
   }
 
   /** One [[deleteWrite]] run's outcome: partitions rewritten (still
@@ -169,7 +190,7 @@ object Merge {
     * column pruning makes this cheap) finds the affected partitions;
     * those partitions re-read, anti-join the key set (broadcast — an
     * erasure batch is small; for bulk deletes run several batches),
-    * and land via the staged dynamic overwrite [[mergeWrite]] uses.
+    * and land via the direct dynamic overwrite [[mergeWrite]] uses.
     * Dynamic overwrite only replaces partitions PRESENT in the
     * written data, so a partition whose every row died would silently
     * SURVIVE — exactly the failure an erasure tool cannot have; those
@@ -183,21 +204,19 @@ object Merge {
     * rewritten partitions' file names changed — [[Layout.zoneMapRead]]
     * refuses on it); rebuild it in one call with
     * [[Layout.zoneMapRebuild]]. */
-  def deleteWrite(spark: org.apache.spark.sql.SparkSession, path: String,
+  def deleteWrite(spark: SparkSession, path: String,
                   deleteKeys: DataFrame, keyCols: Seq[String],
                   partitionCol: String,
                   clusterCols: Seq[String] = Nil): DeleteStats = {
     require(keyCols.nonEmpty, "deleteWrite needs at least one key column")
     val keys = deleteKeys.select(keyCols.map(col): _*).distinct()
-    val conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val saved = spark.conf.get(conf)
-    val target =
-      try { spark.conf.set(conf, "false"); spark.read.parquet(path) }
-      finally spark.conf.set(conf, saved)
+    // partition values as their directory-name strings, so emptied
+    // directories below are named exactly as they sit on disk
+    val target = openTyped(spark, path, partitionCol, StringType)
     val touched = target
       .join(broadcast(keys), keyCols, "left_semi")
       .select(col(partitionCol)).distinct()
-      .collect().map(r => Option(r.get(0)).map(_.toString).orNull).toSeq
+      .collect().map(_.getString(0)).toSeq
     // partition census from the DIRECTORY LISTING, not a second table
     // scan — the same metadata the emptied-directory deletion below
     // relies on; the one probe scan above is the only data read
@@ -209,28 +228,13 @@ object Merge {
         .toLong
     }
     if (touched.isEmpty) return DeleteStats(Nil, Nil, nParts)
-    val nonNull = touched.filter(_ != null)
-    val touchedPred = {
-      val base =
-        if (nonNull.nonEmpty) col(partitionCol).isin(nonNull: _*)
-        else lit(false)
-      if (touched.contains(null)) base || col(partitionCol).isNull else base
-    }
-    val kept = target.filter(touchedPred)
+    val kept = target.filter(inValues(partitionCol, touched))
       .join(broadcast(keys), keyCols, "left_anti")
     val keptParts = kept.select(col(partitionCol)).distinct()
-      .collect().map(r => Option(r.get(0)).map(_.toString).orNull).toSet
-    if (keptParts.nonEmpty) {
-      val stage = path + "_delete_stage_" + java.util.UUID.randomUUID().toString
-      try {
-        Sinks.stagePartitioned(kept, stage, partitionCol, clusterCols)
-        spark.read.parquet(stage).write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partitionCol)
-          .parquet(path)
-      } finally graft.sources.Fs.deleteRecursively(spark, stage)
-    }
+      .collect().map(_.getString(0)).toSet
+    if (keptParts.nonEmpty)
+      Sinks.overwritePartitions(Sinks.clustered(kept, partitionCol, clusterCols),
+        path, partitionCol)
     // partitions whose every row died: dynamic overwrite never saw
     // them — remove their directories explicitly
     val emptied = touched.filterNot(keptParts)

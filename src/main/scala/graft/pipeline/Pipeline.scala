@@ -5,16 +5,26 @@ import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Incremental, Merge}
+import graft.operators.{Incremental, Merge, Par}
 
 /** End-to-end pipeline runner: the Airflow DAG + dbt layer ordering
   * (reference: stripe_update_dag.py:17-42, strict staging → curated →
-  * marts) re-expressed as a topologically-ordered sequence of model
-  * functions with merge materialization and high-water-mark
-  * incrementality.
+  * marts) re-expressed as three layers of model functions with merge
+  * materialization and high-water-mark incrementality.
+  *
+  * Layers run strictly in order, like the DAG's tasks; the models
+  * inside a layer run concurrently, like dbt's worker threads
+  * (`Par.concurrently`), since none reads another's output. Every model
+  * of a layer finishes before the next layer starts. A failing model
+  * invokes the alerting callback (the reference's on_failure_callback,
+  * stripe_update_dag.py:25-37) once per failed model, possibly from
+  * several threads at once; after its siblings finish, the first
+  * failure propagates and the DAG stops at that layer like Airflow
+  * would. Each model's Spark jobs carry the job description
+  * `pipeline:<table>`, so overlapping jobs stay attributable.
   *
   * Rerun safety (the README.md:93-129 idempotency contract): every
-  * table is materialized with `Merge.mergeInto` on its unique key, so
+  * table is materialized with `Merge.mergeWrite` on its unique key, so
   * running the same day twice converges to the same state. The HWM
   * predicates replicate the reference's `WHERE x > (SELECT MAX(x)
   * FROM {{this}})` incremental filters (invoices.sql:11-13 et al) —
@@ -43,25 +53,45 @@ class Pipeline(
     if (graft.sources.Fs.exists(spark, path(name))) spark.read.parquet(path(name))
     else like.limit(0)
 
+  /** One layer: build every model concurrently, in its own thread,
+    * under the job description `pipeline:<table>`; a failure alerts
+    * for that model and, once every sibling has finished, the first
+    * one propagates. Returns each model's table frame by name. */
+  private def layer(models: (String, () => DataFrame)*): Map[String, DataFrame] = {
+    val built = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    Par.concurrently(models.map { case (name, build) => () =>
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"pipeline:$name")
+      try { built.put(name, build()); () }
+      catch { case e: Throwable => onFailure(name, e); throw e }
+      finally sc.setJobDescription(outer)
+    }: _*)
+    models.map { case (name, _) => name -> built.get(name) }.toMap
+  }
+
   /** Merge-materialize `updates` into the named table by `keys`,
     * date-partitioned on `partitionCol` (the reference's partition_by
     * on every incremental model, §1.4). Merge.mergeWrite prunes the
     * target read to the touched partitions and dynamic-overwrites only
     * those directories — daily cost is O(updated partitions), not
-    * O(table). Failures invoke the alerting callback (the reference's
-    * on_failure_callback, stripe_update_dag.py:25-37) then propagate —
-    * the DAG stops at the failed layer like Airflow would. */
+    * O(table). Returns the table as written. */
   private def materialize(name: String, updates: DataFrame,
                           keys: Seq[String], partitionCol: String,
-                          clusterCols: Seq[String] = Nil): DataFrame =
-    try {
-      Merge.mergeWrite(spark, path(name), updates, keys, partitionCol,
-        clusterCols, versionCol = Some("_loaded_at"))
-      // empty updates against a missing table write nothing — hand the
-      // (empty, schema-correct) frame downstream instead of a dead path
-      if (graft.sources.Fs.exists(spark, path(name))) spark.read.parquet(path(name))
-      else updates.limit(0)
-    } catch { case e: Throwable => onFailure(name, e); throw e }
+                          clusterCols: Seq[String] = Nil): DataFrame = {
+    Merge.mergeWrite(spark, path(name), updates, keys, partitionCol,
+      clusterCols, versionCol = Some("_loaded_at"))
+    // empty updates against a missing table write nothing — hand the
+    // (empty, schema-correct) frame downstream instead of a dead path
+    if (graft.sources.Fs.exists(spark, path(name))) spark.read.parquet(path(name))
+    else updates.limit(0)
+  }
+
+  /** Full rebuild of a dimension table; returns it as written. */
+  private def rebuild(name: String, df: DataFrame): DataFrame = {
+    df.write.mode("overwrite").parquet(path(name))
+    spark.read.parquet(path(name))
+  }
 
   private def withHwm(updates: DataFrame, tableName: String,
                       hwmCol: String): DataFrame =
@@ -71,8 +101,8 @@ class Pipeline(
       Incremental.newerThan(updates, target, hwmCol)
     }
 
-  /** Run the full DAG from raw source frames. Returns the mart
-    * frames. Dimension tables are full rebuilds (reference:
+  /** Run the full DAG from raw source frames. Returns every table's
+    * frame by name. Dimension tables are full rebuilds (reference:
     * exchange_rates.sql:1-3, calendar.sql:1-3 `materialized="table"`);
     * everything else is an incremental merge. */
   def run(rawInvoices: DataFrame,
@@ -80,58 +110,45 @@ class Pipeline(
           rawSubscriptionUpdates: DataFrame): Map[String, DataFrame] = {
 
     // ---- staging (stg_* : unique key id, HWM on created_at_date)
-    val stgInvoices = materialize("stg_invoices",
-      withHwm(Models.staged(rawInvoices).withColumn("_loaded_at", loadedAt),
-        "stg_invoices", "created_at_date"),
-      Seq("id"), "created_at_date")
-    val stgSubscriptions = materialize("stg_subscriptions",
-      withHwm(Models.staged(rawSubscriptions).withColumn("_loaded_at", loadedAt),
-        "stg_subscriptions", "created_at_date"),
-      Seq("id"), "created_at_date")
-    val stgSubscriptionUpdates = materialize("stg_subscription_updates",
-      withHwm(Models.staged(rawSubscriptionUpdates).withColumn("_loaded_at", loadedAt),
-        "stg_subscription_updates", "created_at_date"),
-      Seq("id"), "created_at_date")
+    def stagedModel(name: String, raw: DataFrame) = name -> (() => materialize(name,
+      withHwm(Models.staged(raw).withColumn("_loaded_at", loadedAt), name, "created_at_date"),
+      Seq("id"), "created_at_date"))
+    val staging = layer(
+      stagedModel("stg_invoices", rawInvoices),
+      stagedModel("stg_subscriptions", rawSubscriptions),
+      stagedModel("stg_subscription_updates", rawSubscriptionUpdates))
+    val stgInvoices = staging("stg_invoices")
 
-    // ---- dims (full rebuild)
-    val exchangeRates = Models.exchangeRates(spark, asOf)
-    exchangeRates.write.mode("overwrite").parquet(path("exchange_rates"))
-    val calendar = Models.calendar(spark, asOf)
-    calendar.write.mode("overwrite").parquet(path("calendar"))
-
-    // ---- curated (HWM on created_at_date / invoice_created_date)
-    val invoices = materialize("invoices",
-      withHwm(Models.invoices(stgInvoices, loadedAt), "invoices", "created_at_date"),
-      Seq("invoice_id"), "created_at_date", Seq("customer_id"))
-    val lineItems = materialize("invoice_line_items",
-      withHwm(Models.invoiceLineItems(stgInvoices, loadedAt),
-        "invoice_line_items", "invoice_created_date"),
-      Seq("line_item_id"), "invoice_created_date",
-      Seq("invoice_id", "subscription_id"))
+    // ---- dims (full rebuild) and curated (HWM on created_at_date /
+    // invoice_created_date)
+    val curated = layer(
+      "exchange_rates" -> (() => rebuild("exchange_rates", Models.exchangeRates(spark, asOf))),
+      "calendar" -> (() => rebuild("calendar", Models.calendar(spark, asOf))),
+      "invoices" -> (() => materialize("invoices",
+        withHwm(Models.invoices(stgInvoices, loadedAt), "invoices", "created_at_date"),
+        Seq("invoice_id"), "created_at_date", Seq("customer_id"))),
+      "invoice_line_items" -> (() => materialize("invoice_line_items",
+        withHwm(Models.invoiceLineItems(stgInvoices, loadedAt),
+          "invoice_line_items", "invoice_created_date"),
+        Seq("line_item_id"), "invoice_created_date",
+        Seq("invoice_id", "subscription_id"))))
+    val lineItems = curated("invoice_line_items")
+    val fx = curated("exchange_rates")
 
     // ---- marts (composite keys; HWM on invoice_created_at)
-    val fx = spark.read.parquet(path("exchange_rates"))
-    val deferred = materialize("deferred_revenue",
-      withHwm(Models.deferredRevenue(lineItems, fx, loadedAt),
-        "deferred_revenue", "invoice_created_at"),
-      Seq("line_item_id", "as_of_date"), "as_of_date",
-      Seq("customer_id", "subscription_id"))
-    val recognized = materialize("recognized_revenue",
-      withHwm(Models.recognizedRevenue(lineItems, fx, loadedAt),
-        "recognized_revenue", "invoice_created_at"),
-      Seq("line_item_id", "recognition_date"), "recognition_date",
-      Seq("customer_id", "line_item_id"))
+    val marts = layer(
+      "deferred_revenue" -> (() => materialize("deferred_revenue",
+        withHwm(Models.deferredRevenue(lineItems, fx, loadedAt),
+          "deferred_revenue", "invoice_created_at"),
+        Seq("line_item_id", "as_of_date"), "as_of_date",
+        Seq("customer_id", "subscription_id"))),
+      "recognized_revenue" -> (() => materialize("recognized_revenue",
+        withHwm(Models.recognizedRevenue(lineItems, fx, loadedAt),
+          "recognized_revenue", "invoice_created_at"),
+        Seq("line_item_id", "recognition_date"), "recognition_date",
+        Seq("customer_id", "line_item_id"))))
 
-    val out = Map(
-      "stg_invoices" -> stgInvoices,
-      "stg_subscriptions" -> stgSubscriptions,
-      "stg_subscription_updates" -> stgSubscriptionUpdates,
-      "exchange_rates" -> fx,
-      "calendar" -> spark.read.parquet(path("calendar")),
-      "invoices" -> invoices,
-      "invoice_line_items" -> lineItems,
-      "deferred_revenue" -> deferred,
-      "recognized_revenue" -> recognized)
+    val out = staging ++ curated ++ marts
     // register every table as a view so analysts can spark.sql over
     // the warehouse by name (the E3 surface)
     out.foreach { case (name, df) => df.createOrReplaceTempView(name) }

@@ -19,7 +19,7 @@ object Fs {
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
-  /** Recursive delete (staging-dir cleanup); absent paths are a no-op. */
+  /** Recursive delete; absent paths are a no-op. */
   def deleteRecursively(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())

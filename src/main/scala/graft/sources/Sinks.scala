@@ -17,12 +17,16 @@ import org.apache.spark.sql.functions.col
   */
 object Sinks {
 
+  /** File-size cap: guards against one multi-GB file per hot
+    * partition. */
+  private val MaxRecordsPerFile = 5_000_000L
+
   /** The shared partition+cluster layout step: co-locate each
-    * partition value, sort rows by the cluster keys, cap file size.
-    * Both the snapshot write below and Merge.mergeWrite's staging
-    * route through here so the layout policy (including the
-    * maxRecordsPerFile guard against one multi-GB file per hot
-    * partition) lives in exactly one place. */
+    * partition value and sort rows by the cluster keys. The snapshot
+    * write below and Merge.deleteWrite route through here, so the
+    * layout policy lives in one place; Merge.mergeWrite applies the
+    * same layout around its dedupe, on the one shuffle it already
+    * pays. */
   private[graft] def clustered(df: DataFrame, partitionCol: String,
                                clusterCols: Seq[String]): DataFrame =
     if (clusterCols.nonEmpty)
@@ -34,24 +38,27 @@ object Sinks {
     * sorted within each file by `clusterCols`. */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String,
                        clusterCols: Seq[String] = Nil,
-                       maxRecordsPerFile: Long = 5_000_000L): Unit =
+                       maxRecordsPerFile: Long = MaxRecordsPerFile): Unit =
     clustered(df, partitionCol, clusterCols).write
       .mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partitionCol)
       .parquet(path)
 
-  /** Stage a merge result: same clustering + file-size policy as
-    * writePartitioned, written flat (the dynamic-overwrite commit
-    * re-partitions on the way into the target). */
-  private[graft] def stagePartitioned(df: DataFrame, stagePath: String,
-                                      partitionCol: String,
-                                      clusterCols: Seq[String],
-                                      maxRecordsPerFile: Long = 5_000_000L): Unit =
-    clustered(df, partitionCol, clusterCols).write
+  /** Replace exactly the `partitionCol` partitions present in `df`
+    * under `path` (DYNAMIC partition overwrite); every other partition
+    * stays untouched bytes. `df` may read `path` itself: Spark's commit
+    * protocol writes under `<path>/.spark-staging-<job>` and swaps the
+    * written partition directories in at job commit, after every task
+    * has finished reading, and removes the staging directory. */
+  private[graft] def overwritePartitions(df: DataFrame, path: String,
+                                         partitionCol: String): Unit =
+    df.write
       .mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(stagePath)
+      .option("partitionOverwriteMode", "dynamic")
+      .option("maxRecordsPerFile", MaxRecordsPerFile)
+      .partitionBy(partitionCol)
+      .parquet(path)
 
   /** NDJSON snapshot sink — the raw-zone overwrite write (reference:
     * extract_stripe_data.py:105-116, full overwrite per run,

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
@@ -182,9 +184,132 @@ class MergeSpec extends SparkSpecBase {
     val parent = java.nio.file.Files.createTempDirectory("graft-merge-stage").toString
     val dir = parent + "/t"
     Merge.mergeWrite(spark, dir,
-      Seq((1L, "2024-01-01", "a")).toDF("id", "day", "v"), Seq("id"), "day")
-    val leftovers = new java.io.File(parent).listFiles()
-      .map(_.getName).filter(_.contains("_merge_stage"))
+      Seq((1L, "2024-01-01", "a"), (2L, "2024-01-02", "b")).toDF("id", "day", "v"),
+      Seq("id"), "day")
+    Merge.mergeWrite(spark, dir,
+      Seq((1L, "2024-01-01", "a2")).toDF("id", "day", "v"), Seq("id"), "day")
+    Merge.deleteWrite(spark, dir, Seq(1L).toDF("id"), Seq("id"), "day")
+    assert(spark.read.parquet(dir).select("id").as[Long].collect() === Array(2L))
+    val walk = java.nio.file.Files.walk(java.nio.file.Path.of(parent))
+    val leftovers =
+      try walk.iterator().asScala.map(_.getFileName.toString).filter(n =>
+        n.contains("_merge_stage_") || n.contains("_delete_stage_") ||
+          n.startsWith(".spark-staging")).toList
+      finally walk.close()
     assert(leftovers.isEmpty, leftovers.mkString(","))
+  }
+
+  test("mergeWrite is partition-local: rows match on (partition, key)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-merge-local").toString + "/t"
+    Merge.mergeWrite(spark, dir,
+      Seq((1L, "d1", "a"), (2L, "d1", "b")).toDF("id", "day", "v"), Seq("id"), "day")
+    // key 2 updates in place; key 1 also arrives in d2, against the
+    // stable-partition contract: it gains a d2 row and keeps its d1 row
+    Merge.mergeWrite(spark, dir,
+      Seq((2L, "d1", "b2"), (1L, "d2", "a2")).toDF("id", "day", "v"), Seq("id"), "day")
+    val out = spark.read.parquet(dir).select("id", "day", "v")
+      .as[(Long, String, String)].collect().toSet
+    assert(out === Set((1L, "d1", "a"), (2L, "d1", "b2"), (1L, "d2", "a2")))
+  }
+
+  /** Shuffle exchanges in each parquet write planned while `body` runs,
+    * read from the executed (adaptive) plans. */
+  private def writeShuffles(body: => Unit): Seq[Int] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // every node, through adaptive plans and their query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => o.children.flatMap(nodes)
+    })
+    val seen = java.util.Collections.synchronizedList(new java.util.ArrayList[Int]())
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = nodes(qe.executedPlan)
+        if (plan.exists(_.isInstanceOf[DataWritingCommandExec]))
+          seen.add(plan.count(_.isInstanceOf[ShuffleExchangeExec]))
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.graftspark.TestListenerBus.waitUntilEmpty(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.graftspark.TestListenerBus.waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  test("mergeWrite plans exactly one shuffle: mart-shaped and staging-shaped") {
+    val root = java.nio.file.Files.createTempDirectory("graft-merge-plan").toString
+    val d1 = java.sql.Date.valueOf("2024-01-01")
+    val d2 = java.sql.Date.valueOf("2024-01-02")
+    // mart shape: composite key holding the partition column, cluster columns
+    val mart = root + "/mart"
+    Merge.mergeWrite(spark, mart,
+      Seq(("li1", d1, "c1", 1.0), ("li1", d2, "c1", 2.0), ("li2", d1, "c2", 3.0))
+        .toDF("line_item_id", "as_of_date", "customer_id", "v"),
+      Seq("line_item_id", "as_of_date"), "as_of_date", Seq("customer_id"))
+    val martUpd = Seq(("li1", d2, "c1", 20.0), ("li3", d2, "c3", 4.0))
+      .toDF("line_item_id", "as_of_date", "customer_id", "v")
+    assert(writeShuffles(Merge.mergeWrite(spark, mart, martUpd,
+      Seq("line_item_id", "as_of_date"), "as_of_date", Seq("customer_id"))) === Seq(1))
+    assert(spark.read.parquet(mart).select("line_item_id", "v").as[(String, Double)]
+      .collect().toSet === Set(("li1", 1.0), ("li1", 20.0), ("li2", 3.0), ("li3", 4.0)))
+    // staging shape: one key, no cluster columns
+    val stg = root + "/stg"
+    Merge.mergeWrite(spark, stg,
+      Seq(("a", d1, 1L), ("b", d2, 2L)).toDF("id", "created_at_date", "v"),
+      Seq("id"), "created_at_date")
+    val stgUpd = Seq(("b", d2, 20L), ("c", d2, 3L)).toDF("id", "created_at_date", "v")
+    assert(writeShuffles(Merge.mergeWrite(spark, stg, stgUpd, Seq("id"),
+      "created_at_date")) === Seq(1))
+    assert(spark.read.parquet(stg).select("id", "v").as[(String, Long)]
+      .collect().toSet === Set(("a", 1L), ("b", 20L), ("c", 3L)))
+    // one writer per touched partition: one file each
+    def files(dir: String) =
+      new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(files(s"$mart/as_of_date=2024-01-02") === 1)
+    assert(files(s"$stg/created_at_date=2024-01-02") === 1)
+  }
+
+  test("concurrent mergeWrites keep partition types and never touch session conf") {
+    val root = java.nio.file.Files.createTempDirectory("graft-merge-race").toString
+    val strDir = root + "/str"
+    val dateDir = root + "/date"
+    val readDir = root + "/read"
+    def day(d: Int) = java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, d))
+    Merge.mergeWrite(spark, strDir, Seq((1L, "00123", "a")).toDF("id", "pc", "v"),
+      Seq("id"), "pc")
+    Merge.mergeWrite(spark, dateDir, Seq((1L, day(1), "a")).toDF("id", "day", "v"),
+      Seq("id"), "day")
+    Seq((1L, day(1)), (2L, day(2))).toDF("id", "day").write.partitionBy("day").parquet(readDir)
+    val inference = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    val before = spark.conf.get(inference)
+    val rounds = 3
+    val mergesLeft = new java.util.concurrent.CountDownLatch(2)
+    val readTypes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    Par.concurrently(
+      () => try (1 to rounds).foreach(i => Merge.mergeWrite(spark, strDir,
+        Seq((1L, "00123", s"a$i")).toDF("id", "pc", "v"), Seq("id"), "pc"))
+      finally mergesLeft.countDown(),
+      () => try (1 to rounds).foreach(i => Merge.mergeWrite(spark, dateDir,
+        Seq((1L, day(1), s"a$i"), (i + 1L, day(i + 1), "n")).toDF("id", "day", "v"),
+        Seq("id"), "day"))
+      finally mergesLeft.countDown(),
+      // a third reader opens a date-partitioned table throughout
+      () => do readTypes.add(spark.read.parquet(readDir).schema("day").dataType.typeName)
+        while (mergesLeft.getCount > 0))
+    assert(readTypes.asScala === Set("date"))
+    assert(spark.conf.get(inference) === before)
+    assert(new java.io.File(strDir).list().filter(_.startsWith("pc=")).toSeq === Seq("pc=00123"))
+    assert(spark.read.parquet(strDir).select("id", "v").as[(Long, String)].collect() ===
+      Array((1L, s"a$rounds")))
+    val dated = spark.read.parquet(dateDir)
+    assert(dated.schema("day").dataType === org.apache.spark.sql.types.DateType)
+    assert(dated.count() === rounds + 1L)
   }
 }

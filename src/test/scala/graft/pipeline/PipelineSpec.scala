@@ -3,6 +3,8 @@ package graft.pipeline
 import java.nio.file.Files
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpecBase
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -219,6 +221,48 @@ class PipelineSpec extends SparkSpecBase {
       onFailure = (t, _) => alerted = Some(t))
     intercept[Throwable] { bad.run(rawInvoices, emptySubs, emptyUpdates) }
     assert(alerted.contains("stg_invoices"))
+  }
+
+  test("a failing staging model alerts; its siblings finish; no later layer runs") {
+    val wh = Files.createTempDirectory("graft-wh-fail").toString
+    val failingSubs = spark.read.schema(Schemas.subscriptionSchema)
+      .json(spark.createDataset(Seq(
+        s"""{"id":"sub1","customer":"cus1","status":"active","created":$jan10}""")))
+      .withColumn("id", raise_error(lit("stg_subscriptions failed")).cast("string"))
+    val alerted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val bad = new Pipeline(spark, wh, asOf, onFailure = (t, _) => alerted.add(t))
+    val e = intercept[Throwable] { bad.run(rawInvoices, failingSubs, emptyUpdates) }
+    assert(e.toString.contains("stg_subscriptions failed") ||
+      Option(e.getCause).exists(_.toString.contains("stg_subscriptions failed")), e.toString)
+    assert(alerted.asScala === Set("stg_subscriptions"))
+    // the sibling staging model completed its write
+    assert(spark.read.parquet(s"$wh/stg_invoices").count() === 3)
+    // the DAG stopped at the staging layer
+    val later = Seq("exchange_rates", "calendar", "invoices", "invoice_line_items",
+      "deferred_revenue", "recognized_revenue")
+    assert(later.filter(t => new java.io.File(s"$wh/$t").exists()).isEmpty)
+  }
+
+  test("every non-empty model's jobs carry the pipeline:<table> description") {
+    val wh = Files.createTempDirectory("graft-wh-desc").toString
+    val descriptions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
+    }
+    org.apache.spark.graftspark.TestListenerBus.waitUntilEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      runPipeline(wh)
+      org.apache.spark.graftspark.TestListenerBus.waitUntilEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val models = Seq("stg_invoices", "exchange_rates", "calendar", "invoices",
+      "invoice_line_items", "deferred_revenue", "recognized_revenue")
+    val missing = models.map(m => s"pipeline:$m").filterNot(descriptions.contains)
+    assert(missing.isEmpty, s"missing $missing in $descriptions")
+    // set and cleared in each model's own thread: nothing leaks to the caller
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") === null)
   }
 
   test("typed Dataset surface binds the mart schemas") {
